@@ -368,6 +368,8 @@ def read_parquet_dataset(
     format (gtype/coords/envelope columns) loads with zero parsing — the
     fast path for data previously exported by this engine or prepared
     upstream. Column pruning and predicate pushdown apply directly.
+    Rows with a null gtype are dropped (``valid_geometries``), the same
+    load-time filter every parsing reader applies.
 
     Fallbacks for plain user parquet (reference-era surface:
     utils/readers/Reader.scala:85-168 via Sedona readers):
@@ -491,4 +493,4 @@ def read_parquet_dataset(
         df = df.withColumn(
             "ts", parse_ts_cell(F.col("ts").cast("string"), date_pattern)
         )
-    return df
+    return valid_geometries(df)

@@ -21,13 +21,12 @@ spherical formulas (EPSG guidance note 7-2, method 1024):
 
 with R = 6378137.0 (the WGS84 semi-major axis). Anything else (ellipsoid
 datum shifts, conic projections) needs a real projection library:
-when ``pyproj`` is importable (feature-checked like the shapely relate
-tier, operators/relate_shapely.py), ``reproject`` dispatches arbitrary
-CRS pairs to a vectorized pyproj Transformer over the Arrow batch path
-— one C-level transform call per batch, envelopes re-aggregated from
-the transformed vertices (general projections are not monotone per
-axis, so the closed-form pair's corner-transform shortcut does not
-apply). Without pyproj, non-Mercator pairs raise with guidance rather
+when ``pyproj`` is importable (``have_projection_lib``), ``reproject``
+dispatches arbitrary CRS pairs to a vectorized pyproj Transformer over
+the Arrow batch path — one C-level transform call per batch, envelopes
+re-aggregated from the transformed vertices (general projections are
+not monotone per axis, so the closed-form pair's corner-transform
+shortcut does not apply). Without pyproj, non-Mercator pairs raise with guidance rather
 than approximating.
 
 Execution model: a single ``selectExpr`` of nested ``transform`` lambdas
@@ -83,7 +82,9 @@ PROJJSON_BY_CRS = {
 
 def have_projection_lib() -> bool:
     """True when pyproj (PROJ bindings) is importable — the env-gated
-    general-CRS tier, feature-checked like relate_shapely/multimodal.
+    general-CRS tier, feature-checked like the multimodal decoders.
+    It adds a capability (CRS pairs the closed form cannot express);
+    it is not a second implementation of one the engine already has.
 
     This checks the DRIVER's environment only. The pyproj transform
     itself runs inside mapInArrow on the executors, so a cluster whose

@@ -49,7 +49,7 @@ import numpy as np
 
 SCALE = 512.0
 MAX_SCALED = float(1 << 24)
-MAX_VERTS = 8  # padded ring size (without closure); larger rings -> slow path
+MAX_VERTS = 8  # ring size (without closure); larger rings -> slow path
 
 UNDECIDED, DISJOINT, A_IN_B, B_IN_A, OVERLAP = 0, 1, 2, 3, 4
 
@@ -82,69 +82,20 @@ CODE_FLAGS = {
 }
 
 
-def _extract_ring(gtype, parts):
-    """Scaled integer ring (list of (x, y) float-int tuples), vertex
-    count and orientation sign, or None when this geometry is ineligible
-    for the fast path. Pure Python on purpose: per-row numpy calls cost
-    more than the whole decision tensor (measured 94 us/pair -> 6 us)."""
-    if gtype != "POLYGON" or len(parts) != 1:
-        return None
-    ring = parts[0]
-    k = len(ring)
-    p0, plast = ring[0], ring[-1]
-    if k >= 2 and p0[0] == plast[0] and p0[1] == plast[1]:
-        k -= 1
-    if not 3 <= k <= MAX_VERTS:
-        return None
-    out = []
-    for idx in range(k):
-        p = ring[idx]
-        x = float(p[0]) * SCALE
-        y = float(p[1]) * SCALE
-        if x % 1.0 or y % 1.0 or x > MAX_SCALED or x < -MAX_SCALED \
-                or y > MAX_SCALED or y < -MAX_SCALED:
-            return None
-        out.append((x, y))
-    # strict convexity + consistent orientation (zero cross -> slow path)
-    sign = 0
-    for i in range(k):
-        ax, ay = out[i]
-        bx, by = out[i + 1 - k * (i + 1 == k)]
-        cx, cy = out[i + 2 - k * (i + 2 >= k)]
-        cr = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-        if cr > 0:
-            s = 1
-        elif cr < 0:
-            s = -1
-        else:
-            return None
-        if sign == 0:
-            sign = s
-        elif s != sign:
-            return None
-    return out, k, float(sign)
-
-
-def _orient_tensor(A, ka, sa, B, kmax):
-    """OA[n, i, j]: sign of orient(a_i, a_{i+1}, b_j) normalized so that
-    positive means 'strictly inside edge i's half-plane', with padded
-    edges masked out via edge_valid."""
-    nxt = np.roll(A, -1, axis=1)
-    E = nxt - A                                     # [n, K, 2]
-    rel = B[:, None, :, :] - A[:, :, None, :]       # [n, K(edges), K(verts), 2]
+def _orient_tensor(A, sa, B):
+    """O[n, i, j]: sign of orient(a_i, a_{i+1}, b_j) normalized so that
+    positive means 'strictly inside edge i's half-plane'."""
+    E = np.roll(A, -1, axis=1) - A                  # [n, K, 2]
+    rel = B[:, None, :, :] - A[:, :, None, :]       # [n, K(edges), J(verts), 2]
     O = E[:, :, None, 0] * rel[:, :, :, 1] - E[:, :, None, 1] * rel[:, :, :, 0]
     O *= sa[:, None, None]
-    idx = np.arange(kmax)[None, :]
-    # padding repeats the last real vertex: edges k-1..K-2 are zero-length,
-    # edge K-1 (pad -> vertex 0) duplicates the closing edge k-1 -> 0.
-    edge_valid = (idx < ka[:, None] - 1) | (idx == kmax - 1)
-    return O, edge_valid
+    return O
 
 
 def _dense_ring_checks(ring):
     """Scaling / integrality / convexity / closure checks over a dense
     batch of closed rings ``ring[n, P, 2]`` (first vertex repeated
-    last). Returns (verts[n,k,2], k, sign[n], valid[n]) or None when the
+    last). Returns (verts[n,k,2], sign[n], valid[n]) or None when the
     shared arity is outside the fast-path envelope; rows failing any
     PER-ROW probe (closure included) come back invalid, not batch-fatal."""
     k = ring.shape[1] - 1  # vertices sans closure
@@ -162,7 +113,7 @@ def _dense_ring_checks(ring):
     sign = np.where(
         np.all(cr > 0, axis=1), 1.0, np.where(np.all(cr < 0, axis=1), -1.0, 0.0)
     )
-    return r, k, sign, valid & (sign != 0.0)
+    return r, sign, valid & (sign != 0.0)
 
 
 def preclassify_dense(ring_a, ring_b) -> np.ndarray | None:
@@ -171,21 +122,47 @@ def preclassify_dense(ring_a, ring_b) -> np.ndarray | None:
     Arrow-native verifier gathers straight from the list-array buffers —
     no per-row objects anywhere). Rows failing the integrality/convexity
     probe come back UNDECIDED; a shared shape outside the envelope
-    returns None (caller takes the ragged path)."""
+    returns None (the caller leaves those rows UNDECIDED)."""
     ha = _dense_ring_checks(ring_a)
     if ha is None:
         return None
     hb = _dense_ring_checks(ring_b)
     if hb is None:
         return None
-    n = ring_a.shape[0]
-    A, ka, sa, va = ha
-    B, kb, sb, vb = hb
-    OA, eva = _orient_tensor(A, np.full(n, ka), sa, B, ka)
-    OB, evb = _orient_tensor(B, np.full(n, kb), sb, A, kb)
-    out = _decide(OA, eva, OB, evb)
+    A, sa, va = ha
+    B, sb, vb = hb
+    OA = _orient_tensor(A, sa, B)   # A's edge axes vs B's vertices
+    OB = _orient_tensor(B, sb, A)   # B's edge axes vs A's vertices
+    sep = np.any(np.all(OA < 0, axis=2), axis=1) | np.any(
+        np.all(OB < 0, axis=2), axis=1
+    )
+    b_in_a = np.all(OA > 0, axis=(1, 2))
+    a_in_b = np.all(OB > 0, axis=(1, 2))
+    # no weak separating axis anywhere -> interiors intersect
+    no_weak_axis = np.all(np.any(OA > 0, axis=2), axis=1) & np.all(
+        np.any(OB > 0, axis=2), axis=1
+    )
+    b_out = np.any(OA < 0, axis=(1, 2))   # some B vertex strictly outside A
+    a_out = np.any(OB < 0, axis=(1, 2))
+    overlap = no_weak_axis & b_out & a_out & ~b_in_a & ~a_in_b
+
+    out = np.zeros(OA.shape[0], dtype=np.int8)
+    out[sep] = DISJOINT
+    out[b_in_a] = B_IN_A
+    out[a_in_b] = A_IN_B
+    out[overlap] = OVERLAP
     out[~(va & vb)] = UNDECIDED
     return out
+
+
+def _scaled_points(pts):
+    """(scaled points, per-row lattice-validity) for a (n, K, 2) batch."""
+    ps = pts * SCALE
+    valid = (
+        np.all(np.abs(ps) <= MAX_SCALED, axis=(1, 2))
+        & np.all(ps == np.rint(ps), axis=(1, 2))
+    )
+    return ps, valid
 
 
 def preclassify_points_vs_poly(pts, ring) -> np.ndarray | None:
@@ -206,33 +183,16 @@ def preclassify_points_vs_poly(pts, ring) -> np.ndarray | None:
     hb = _dense_ring_checks(ring)
     if hb is None:
         return None
-    B, kb, sb, vb = hb
-    ps = pts * SCALE
-    va = (
-        np.all(np.abs(ps) <= MAX_SCALED, axis=(1, 2))
-        & np.all(ps == np.rint(ps), axis=(1, 2))
-    )
-    n = ring.shape[0]
-    OB, evb = _orient_tensor(B, np.full(n, kb), sb, ps, kb)
-    allj_pos = np.all(OB > 0, axis=2)
-    allj_neg = np.all(OB < 0, axis=2)
-    inside = np.all(allj_pos | ~evb, axis=1)
-    sep = np.any(allj_neg & evb, axis=1)
-    out = np.zeros(n, dtype=np.int8)
+    B, sb, vb = hb
+    ps, va = _scaled_points(pts)
+    OB = _orient_tensor(B, sb, ps)
+    inside = np.all(OB > 0, axis=(1, 2))
+    sep = np.any(np.all(OB < 0, axis=2), axis=1)
+    out = np.zeros(ring.shape[0], dtype=np.int8)
     out[sep] = DISJOINT
     out[inside] = A_IN_B
     out[~(va & vb)] = UNDECIDED
     return out
-
-
-def _scaled_points(pts):
-    """(scaled points, per-row lattice-validity) for a (n, K, 2) batch."""
-    ps = pts * SCALE
-    valid = (
-        np.all(np.abs(ps) <= MAX_SCALED, axis=(1, 2))
-        & np.all(ps == np.rint(ps), axis=(1, 2))
-    )
-    return ps, valid
 
 
 def preclassify_pts_vs_pts(A, B) -> np.ndarray:
@@ -313,115 +273,3 @@ def preclassify_line_vs_line(A, B) -> np.ndarray:
     out[no_int.all(axis=(1, 2))] = DISJOINT
     out[~(va & vb)] = UNDECIDED
     return out
-
-
-def _extract_homogeneous(gtypes, coords):
-    """Batch extraction when every row is a single closed ring of the
-    same vertex count (the shape every tile-join candidate batch has):
-    one np.asarray for the whole column, then scaling / integrality /
-    convexity as batched array ops. Returns (verts[n,k,2], k, sign[n],
-    valid[n]) or None when the batch is not homogeneous."""
-    for g in gtypes:
-        if g != "POLYGON":
-            return None
-    try:
-        arr = np.asarray(coords, dtype=np.float64)
-    except (ValueError, TypeError):
-        return None
-    if arr.ndim != 4 or arr.shape[1] != 1:
-        return None
-    return _dense_ring_checks(arr[:, 0])
-
-
-def _decide(OA, eva, OB, evb):
-    """The strict-sign decision logic shared by both batch layouts."""
-    allj_neg_A = np.all(OA < 0, axis=2)
-    allj_pos_A = np.all(OA > 0, axis=2)
-    anyj_pos_A = np.any(OA > 0, axis=2)
-    anyj_neg_A = np.any(OA < 0, axis=2)
-    allj_neg_B = np.all(OB < 0, axis=2)
-    allj_pos_B = np.all(OB > 0, axis=2)
-    anyj_pos_B = np.any(OB > 0, axis=2)
-    anyj_neg_B = np.any(OB < 0, axis=2)
-
-    def any_axis(per_axis, ev):
-        return np.any(per_axis & ev, axis=1)
-
-    def all_axes(per_axis, ev):
-        return np.all(per_axis | ~ev, axis=1)
-
-    sep = any_axis(allj_neg_A, eva) | any_axis(allj_neg_B, evb)
-    b_in_a = all_axes(allj_pos_A, eva)
-    a_in_b = all_axes(allj_pos_B, evb)
-    # no weak separating axis anywhere -> interiors intersect
-    no_weak_axis = all_axes(anyj_pos_A, eva) & all_axes(anyj_pos_B, evb)
-    b_out = any_axis(anyj_neg_A, eva)   # some B vertex strictly outside A
-    a_out = any_axis(anyj_neg_B, evb)
-    overlap = no_weak_axis & b_out & a_out & ~b_in_a & ~a_in_b
-
-    out = np.zeros(OA.shape[0], dtype=np.int8)
-    out[sep] = DISJOINT
-    out[b_in_a] = B_IN_A
-    out[a_in_b] = A_IN_B
-    out[overlap] = OVERLAP
-    return out
-
-
-def preclassify_batch(gta, ca, gtb, cb) -> np.ndarray:
-    """Return an int8 code per row: UNDECIDED (use relate_pair) or one of
-    DISJOINT / A_IN_B / B_IN_A / OVERLAP (look up CODE_DICTS)."""
-    n = len(gta)
-    codes = np.zeros(n, dtype=np.int8)
-    if n == 0:
-        return codes
-
-    ha = _extract_homogeneous(gta, ca)
-    hb = _extract_homogeneous(gtb, cb) if ha is not None else None
-    if ha is not None and hb is not None:
-        A, ka, sa, va = ha
-        B, kb, sb, vb = hb
-        kan = np.full(n, ka)
-        kbn = np.full(n, kb)
-        OA, eva = _orient_tensor(A, kan, sa, B, ka)
-        OB, evb = _orient_tensor(B, kbn, sb, A, kb)
-        out = _decide(OA, eva, OB, evb)
-        out[~(va & vb)] = UNDECIDED
-        return out
-    rows, As, Bs, kas, kbs, sas, sbs = [], [], [], [], [], [], []
-    for i in range(n):
-        ga = _extract_ring(gta[i], ca[i])
-        if ga is None:
-            continue
-        gb = _extract_ring(gtb[i], cb[i])
-        if gb is None:
-            continue
-        ra, ka, sa = ga
-        rb, kb, sb = gb
-        rows.append(i)
-        As.append(ra)
-        Bs.append(rb)
-        kas.append(ka)
-        kbs.append(kb)
-        sas.append(sa)
-        sbs.append(sb)
-    if not rows:
-        return codes
-
-    # pad to the batch's max ring size, not MAX_VERTS: a triangle batch
-    # then runs a 4x4 tensor instead of 8x8 (4x less arithmetic)
-    kmax = max(max(kas), max(kbs))
-    A = np.asarray(
-        [r + [r[-1]] * (kmax - k) for r, k in zip(As, kas)], dtype=np.float64
-    )
-    B = np.asarray(
-        [r + [r[-1]] * (kmax - k) for r, k in zip(Bs, kbs)], dtype=np.float64
-    )
-    ka = np.asarray(kas)
-    kb = np.asarray(kbs)
-    sa = np.asarray(sas)
-    sb = np.asarray(sbs)
-
-    OA, eva = _orient_tensor(A, ka, sa, B, kmax)   # A's axes vs B's vertices
-    OB, evb = _orient_tensor(B, kb, sb, A, kmax)   # B's axes vs A's vertices
-    codes[np.asarray(rows)] = _decide(OA, eva, OB, evb)
-    return codes

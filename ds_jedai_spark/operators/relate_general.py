@@ -12,9 +12,10 @@ linkers/GIAnt.scala:32-37):
    (kind, arity) into dense numpy tensors (convex SAT, point-in-convex,
    point-set algebra, proven-disjoint line tests — relate_fast.py);
 2. per-pair exact predicates below for whatever the tensors leave
-   UNDECIDED (boundary contact, non-convex, holes, off-lattice);
-3. optional shapely 2.x vectorized dispatch when the library exists
-   (relate_shapely.py, feature-checked on the executor).
+   UNDECIDED (boundary contact, non-convex, holes, off-lattice).
+
+Every batch takes both steps in that order, so the flags do not depend
+on which optional packages an executor has installed.
 
 Exactness scope:
 - POINT vs POINT / LINESTRING / POLYGON (with holes): exact (orientation
@@ -509,19 +510,19 @@ def _dense_points_subset(f, rows, P):
 
 
 def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
-    """Grouped dense pre-classification of a RAGGED batch: rows are
-    bucketed by their (kind, arity) pairs and each bucket runs a dense
-    tensor — no per-row Python extraction (the former ``_extract_ring``
-    loop measured ~15us per row, dominating mixed-corpus batches).
-    ``kind_*`` is int8 per row: 0 = other, 1 = polygon, 2 = point set
-    (POINT/MULTIPOINT), 3 = line (LINESTRING/MULTILINESTRING). Bucket
-    families: polygon x polygon (full SAT codes), any dim<2 vertex set x
-    polygon and its swap (strict inside/disjoint), point-set x point-set
-    (full set algebra sans equals), point-set x line and line x line
-    (proven-disjoint only). Everything else stays UNDECIDED for the
-    per-pair exact path.
-    Returns an int8 code array, or None when the batch violates the
-    leaves-are-[x,y] invariant."""
+    """Grouped dense pre-classification of a batch: rows are bucketed by
+    their (kind, arity) pairs and each bucket runs one dense tensor — no
+    per-row Python extraction. A batch of one shape (every tile-join
+    candidate stream of triangles, say) is a single bucket.
+    ``kind_*`` is int8 per row (``_row_kinds``): 0 = other, 1 = polygon,
+    2 = point set (POINT/MULTIPOINT), 3 = line
+    (LINESTRING/MULTILINESTRING). Bucket families: polygon x polygon
+    (full SAT codes), any dim<2 vertex set x polygon and its swap
+    (strict inside/disjoint), point-set x point-set (full set algebra
+    sans equals), point-set x line and line x line (proven-disjoint
+    only). Everything else stays UNDECIDED for the per-pair exact path.
+    Requires every coords leaf of both sides to be an [x, y] pair
+    (``_check_xy``). Returns an int8 code array."""
     import numpy as np
 
     from ds_jedai_spark.operators.relate_fast import (
@@ -536,12 +537,8 @@ def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
         preclassify_pts_vs_pts,
     )
 
-    o1a, o2a, o3a, _ = fs
-    o1b, o2b, o3b, _ = ft
-    if not (
-        bool(np.all(np.diff(o3a) == 2)) and bool(np.all(np.diff(o3b) == 2))
-    ):
-        return None
+    o1a, o2a, _, _ = fs
+    o1b, o2b, _, _ = ft
     codes = np.zeros(n, dtype=np.int8)
     if n == 0:
         return codes
@@ -649,32 +646,48 @@ def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
     return codes
 
 
-def _try_dense(f, n):
-    """(n, P, 2) closed-ring gather when every row is exactly one part of
-    a shared point count with [x, y] leaves — one fancy-index over the
-    flat value buffer, zero per-row work. None when ragged."""
+# Row kinds for _ragged_preclassify: position in _KIND_GTYPES looked up
+# in _KIND_CODES; any other gtype (MULTIPOLYGON, ...) is kind 0, which
+# no bucket claims, so those rows go straight to relate_pair.
+_KIND_GTYPES = ("POLYGON", "POINT", "MULTIPOINT", "LINESTRING", "MULTILINESTRING")
+_KIND_CODES = (1, 2, 2, 3, 3, 0)
+
+
+def _row_kinds(gtype_col):
+    """int8 kind per row of an Arrow gtype column: one ``index_in`` over
+    the column, no Python strings."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    idx = pc.index_in(
+        gtype_col, value_set=pa.array(_KIND_GTYPES, type=gtype_col.type)
+    )
+    idx = pc.fill_null(idx, len(_KIND_GTYPES)).to_numpy()
+    return np.asarray(_KIND_CODES, dtype=np.int8)[idx]
+
+
+def _check_xy(f, name: str) -> None:
+    """Raise unless every coordinate leaf of a flattened coords column is
+    an [x, y] pair — the layout every dense gather and ``_row_parts``
+    read. A third value would otherwise shift every later point."""
     import numpy as np
 
-    o1, o2, o3, vals = f
-    if not bool(np.all(np.diff(o1) == 1)):
-        return None
-    part_idx = o1[:-1]
-    npts = o2[part_idx + 1] - o2[part_idx]
-    if n == 0 or not bool(np.all(npts == npts[0])):
-        return None
-    P = int(npts[0])
-    pp = o2[part_idx][:, None] + np.arange(P)[None, :]
-    starts = o3[pp]
-    if not bool(np.all(o3[pp + 1] - starts == 2)):
-        return None
-    return vals[starts[..., None] + np.arange(2)]
+    if not bool(np.all(np.diff(f[2]) == 2)):
+        raise ValueError(
+            f"with_general_relations: column {name!r} has a coordinate "
+            "that is not an [x, y] pair"
+        )
 
 
 def with_general_relations(
     pairs: DataFrame, s: str = "s_", t: str = "t_", spread: bool = True
 ) -> DataFrame:
     """Append r_<relation> booleans computed by the general-path verifier.
-    Requires {s}gtype/{s}coords and {t}gtype/{t}coords columns.
+    Requires {s}gtype/{s}coords and {t}gtype/{t}coords columns with no
+    null cells and [x, y] coordinate leaves; a batch that breaks either
+    rule raises ValueError naming the column (readers drop unparsable
+    rows with model/geometry.valid_geometries).
 
     Arrow-native (``mapInArrow``): the verifier reads the nested coords
     columns through their raw offset/value buffers and passes every input
@@ -682,11 +695,13 @@ def with_general_relations(
     arrays ever happens. This is the dominant cost at scale, not the
     geometry math: on the sf0.1 triangle soak (31.4M pairs) an identity
     ``mapInPandas`` round-trip alone measures 319s on local[32] — 70% of
-    the old 453s wall — while the plain JVM count is 19.5s. Fixed-shape
-    batches (every tile-join candidate stream) gather straight into a
-    dense (n, P, 2) tensor for the exact convex pre-classifier
-    (relate_fast.preclassify_dense); only contact/degenerate rows pay the
-    per-pair exact path, fed by zero-copy row views.
+    the old 453s wall — while the plain JVM count is 19.5s. Each batch
+    takes one path: rows bucket by (kind, arity) into dense tensors for
+    the exact pre-classifiers (``_ragged_preclassify``; a fixed-shape
+    polygon batch is one ``relate_fast.preclassify_dense`` call), and
+    only the rows those leave UNDECIDED (contact, degenerate, holes,
+    off-lattice, MULTIPOLYGON) pay the per-pair exact ``relate_pair``,
+    fed by zero-copy row views.
 
     ``spread`` round-robin-repartitions the candidate stream first: a
     broadcast tile join preserves the scan's input partitioning, so a
@@ -714,103 +729,36 @@ def with_general_relations(
     def run(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        from ds_jedai_spark.operators.relate_fast import (
-            CODE_FLAGS,
-            UNDECIDED,
-            preclassify_batch,
-            preclassify_dense,
-        )
-        from ds_jedai_spark.operators.relate_shapely import (
-            have_geometry_lib,
-            relate_batch,
-        )
+        from ds_jedai_spark.operators.relate_fast import CODE_FLAGS, UNDECIDED
 
-        # Feature check runs on the executor (workers may differ from
-        # the driver) — when shapely 2.x is present the whole batch goes
-        # through GEOS's vectorized predicates (the reference's JTS-speed
-        # relate, model/entities/EntityT.scala:42-45); otherwise the
-        # no-dependency exact path below stays the verifier of record.
-        use_lib = have_geometry_lib()
         for batch in batches:
-            n = batch.num_rows
-            sc_col, tc_col = batch.column(i_sc), batch.column(i_tc)
-            sg_col, tg_col = batch.column(i_sg), batch.column(i_tg)
-            clean = (
-                sc_col.null_count == 0
-                and tc_col.null_count == 0
-                and sg_col.null_count == 0
-                and tg_col.null_count == 0
-            )
-            ga_l = gb_l = fs = ft = ca_l = cb_l = None
-            codes = None
-            if clean and not use_lib:
-                fs, ft = _flatten3(sc_col), _flatten3(tc_col)
-                all_poly = bool(
-                    pc.all(pc.equal(sg_col, "POLYGON")).as_py()
-                ) and bool(pc.all(pc.equal(tg_col, "POLYGON")).as_py())
-                if all_poly and n:
-                    da = _try_dense(fs, n)
-                    db = _try_dense(ft, n) if da is not None else None
-                    if da is not None and db is not None:
-                        codes = preclassify_dense(da, db)
-                if codes is None:
-                    # Ragged batch: bucket by (kind, arity), dense
-                    # tensor per bucket — no per-row extraction.
-                    ga_l = sg_col.to_pylist()
-                    gb_l = tg_col.to_pylist()
-
-                    def kinds(gl):
-                        return np.fromiter(
-                            (1 if g == "POLYGON"
-                             else 2 if g in ("POINT", "MULTIPOINT")
-                             else 3 if g in ("LINESTRING", "MULTILINESTRING")
-                             else 0
-                             for g in gl),
-                            dtype=np.int8,
-                            count=n,
-                        )
-
-                    codes = _ragged_preclassify(
-                        fs, ft, kinds(ga_l), kinds(gb_l), n
+            for j in (i_sg, i_sc, i_tg, i_tc):
+                if batch.column(j).null_count:
+                    raise ValueError(
+                        f"with_general_relations: column {names[j]!r} has "
+                        "null cells"
                     )
-            if codes is None:
-                if ga_l is None:
-                    ga_l, gb_l = sg_col.to_pylist(), tg_col.to_pylist()
-                leaves_xy = (
-                    fs is not None
-                    and bool(np.all(np.diff(fs[2]) == 2))
-                    and bool(np.all(np.diff(ft[2]) == 2))
+            sg_col, tg_col = batch.column(i_sg), batch.column(i_tg)
+            fs, ft = _flatten3(batch.column(i_sc)), _flatten3(batch.column(i_tc))
+            _check_xy(fs, names[i_sc])
+            _check_xy(ft, names[i_tc])
+            codes = _ragged_preclassify(
+                fs, ft, _row_kinds(sg_col), _row_kinds(tg_col), batch.num_rows
+            )
+            res = {r: CODE_FLAGS[r][codes] for r in RELATIONS}
+            und = np.nonzero(codes == UNDECIDED)[0]
+            ga_l = sg_col.take(und).to_pylist()
+            gb_l = tg_col.take(und).to_pylist()
+            for k, i in enumerate(und):
+                d = relate_pair(
+                    ga_l[k], _row_parts(fs, i), gb_l[k], _row_parts(ft, i)
                 )
-                if use_lib or not clean or not leaves_xy:
-                    # The not-leaves_xy arm matters: _ragged_preclassify
-                    # returned None because coords leaves are NOT [x,y]
-                    # pairs, so _row_parts' reshape(-1, 2) would garble
-                    # (or raise on odd length) exactly those rows.
-                    ca_l, cb_l = sc_col.to_pylist(), tc_col.to_pylist()
-                    fs = ft = None
-                else:
-                    ca_l = [_row_parts(fs, i) for i in range(n)]
-                    cb_l = [_row_parts(ft, i) for i in range(n)]
-                if use_lib:
-                    res = relate_batch(ga_l, ca_l, gb_l, cb_l)
-                else:
-                    codes = preclassify_batch(ga_l, ca_l, gb_l, cb_l)
-            if codes is not None:
-                res = {r: CODE_FLAGS[r][codes] for r in RELATIONS}
-                und = np.nonzero(codes == UNDECIDED)[0]
-                if len(und) and ga_l is None:
-                    ga_l, gb_l = sg_col.to_pylist(), tg_col.to_pylist()
-                for i in und:
-                    pa_i = _row_parts(fs, i) if fs is not None else ca_l[i]
-                    pb_i = _row_parts(ft, i) if ft is not None else cb_l[i]
-                    d = relate_pair(ga_l[i], pa_i, gb_l[i], pb_i)
-                    for r in RELATIONS:
-                        res[r][i] = d[r]
+                for r in RELATIONS:
+                    res[r][i] = d[r]
             yield pa.RecordBatch.from_arrays(
                 [batch.column(j) for j in range(batch.num_columns)]
-                + [pa.array(np.ascontiguousarray(res[r])) for r in RELATIONS],
+                + [pa.array(res[r]) for r in RELATIONS],
                 names=names + [f"r_{r}" for r in RELATIONS],
             )
 

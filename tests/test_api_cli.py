@@ -96,6 +96,22 @@ def test_de9im_run_matches_brute_force(spark, conf_path):
     assert got["n_crosses"] == bf.where("r_crosses").count()
 
 
+def test_row_format_parquet_drops_null_gtype_rows(spark, conf_path, tmp_path):
+    """A row-format parquet row with a null gtype is dropped at read, like
+    an unparsable WKT cell, instead of reaching the verifier."""
+    cfg = load_config(conf_path)
+    want = api.run(spark, cfg).first().asDict()
+    src = api.read_dataset(spark, cfg.source)
+    bad = src.where(F.col("id") == "1").withColumn(
+        "id", F.lit("99").cast(src.schema["id"].dataType)
+    ).withColumn("gtype", F.lit(None).cast("string"))
+    out = str(tmp_path / "source.parquet")
+    src.unionByName(bad).write.parquet(out)
+    cfg.source.path = out
+    assert api.read_dataset(spark, cfg.source).count() == src.count()
+    assert api.run(spark, cfg).first().asDict() == want
+
+
 def test_single_relation_pairs(spark, conf_path, tmp_path):
     cfg = load_config(conf_path)
     cfg.relation = "INTERSECTS"

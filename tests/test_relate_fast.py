@@ -1,19 +1,37 @@
 """Cross-validation of the vectorized convex pre-classifier against the
 exact per-pair path: on every decided row the two must agree flag-for-flag,
 and every boundary-contact configuration must come back UNDECIDED-or-right
-(the fast path may never change a relation, only skip work)."""
+(the fast path may never change a relation, only skip work). Batches go
+through the verifier's own classifier: Arrow coords columns flattened by
+``_flatten3``, kinds from ``_row_kinds``, codes from
+``_ragged_preclassify``."""
 
 import random
 
-import numpy as np
+import pyarrow as pa
 import pytest
 
-from ds_jedai_spark.operators.relate_fast import (
-    CODE_DICTS,
-    UNDECIDED,
-    preclassify_batch,
+from ds_jedai_spark.operators.relate_fast import CODE_DICTS, UNDECIDED
+from ds_jedai_spark.operators.relate_general import (
+    _flatten3,
+    _ragged_preclassify,
+    _row_kinds,
+    relate_pair,
 )
-from ds_jedai_spark.operators.relate_general import relate_pair
+
+_COORDS = pa.list_(pa.list_(pa.list_(pa.float64())))
+
+
+def preclassify(gta, ca, gtb, cb):
+    """Per-row codes of the production batch classifier for one batch of
+    (gtype, coords) pairs."""
+    return _ragged_preclassify(
+        _flatten3(pa.array(ca, type=_COORDS)),
+        _flatten3(pa.array(cb, type=_COORDS)),
+        _row_kinds(pa.array(gta, type=pa.string())),
+        _row_kinds(pa.array(gtb, type=pa.string())),
+        len(ca),
+    )
 
 
 def _cross(o, a, b):
@@ -50,7 +68,7 @@ def _convex_poly(rng, maxr=48):
 
 def _check_agreement(ca, cb):
     n = len(ca)
-    codes = preclassify_batch(["POLYGON"] * n, ca, ["POLYGON"] * n, cb)
+    codes = preclassify(["POLYGON"] * n, ca, ["POLYGON"] * n, cb)
     decided = 0
     for i in range(n):
         if codes[i] == UNDECIDED:
@@ -99,7 +117,7 @@ def test_random_convex_pairs_agree_with_exact_path():
     ],
 )
 def test_contact_cases_fall_back(a, b):
-    codes = preclassify_batch(["POLYGON"], [a], ["POLYGON"], [b])
+    codes = preclassify(["POLYGON"], [a], ["POLYGON"], [b])
     assert codes[0] == UNDECIDED
 
 
@@ -107,16 +125,16 @@ def test_nonconvex_and_general_fall_back():
     # nonconvex quad -> slow path
     nc = [[[0, 0], [4, 0], [1, 1], [0, 4], [0, 0]]]
     tri = [[[10, 10], [12, 10], [11, 12], [10, 10]]]
-    assert preclassify_batch(["POLYGON"], [nc], ["POLYGON"], [tri])[0] == UNDECIDED
+    assert preclassify(["POLYGON"], [nc], ["POLYGON"], [tri])[0] == UNDECIDED
     # polygon with hole -> slow path
     holed = [
         [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],
         [[4, 4], [6, 4], [6, 6], [4, 6], [4, 4]],
     ]
-    assert preclassify_batch(["POLYGON"], [holed], ["POLYGON"], [tri])[0] == UNDECIDED
+    assert preclassify(["POLYGON"], [holed], ["POLYGON"], [tri])[0] == UNDECIDED
     # non-dyadic-on-the-512-lattice coordinates -> slow path
     off = [[[0.001, 0], [2, 0], [1, 2], [0.001, 0]]]
-    assert preclassify_batch(["POLYGON"], [off], ["POLYGON"], [tri])[0] == UNDECIDED
+    assert preclassify(["POLYGON"], [off], ["POLYGON"], [tri])[0] == UNDECIDED
 
 
 def test_clean_cases_decide():
@@ -125,7 +143,7 @@ def test_clean_cases_decide():
     inner = [[[0.75, 0.25], [1.25, 0.25], [1.0, 0.75], [0.75, 0.25]]]
     outer = [[[-10.0, -10.0], [20.0, -10.0], [1.0, 20.0], [-10.0, -10.0]]]
     overlap = [[[1.0, -1.0], [3.0, -1.0], [1.0, 1.5], [1.0, -1.0]]]
-    codes = preclassify_batch(
+    codes = preclassify(
         ["POLYGON"] * 4,
         [tri_a, tri_a, tri_a, tri_a],
         ["POLYGON"] * 4,
@@ -136,16 +154,6 @@ def test_clean_cases_decide():
         exact = relate_pair("POLYGON", tri_a, "POLYGON", b)
         fast = CODE_DICTS[int(code)]
         assert fast == {k: exact[k] for k in fast}
-
-
-def test_numpy_object_input_shape():
-    # mapInPandas hands coords as numpy object arrays of ndarrays
-    tri = np.array([np.array([[0.0, 0.0], [2.0, 0.0], [1.0, 2.0], [0.0, 0.0]])],
-                   dtype=object)
-    far = np.array([np.array([[50.0, 50.0], [52.0, 50.0], [51.0, 52.0],
-                              [50.0, 50.0]])], dtype=object)
-    codes = preclassify_batch(["POLYGON"], [tri], ["POLYGON"], [far])
-    assert codes[0] == 1
 
 
 def test_points_vs_poly_preclassifier_agrees_with_exact_path():

@@ -16,6 +16,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from conftest import SF_SMALL
 
+import pytest
 from pyspark.sql import functions as F
 
 from ds_jedai_spark.io.synthetic import line_sql, load_sql, source_box_sql
@@ -154,11 +155,12 @@ def test_line_line_gapped_collinear_coverage_not_within():
 
 
 def test_ragged_arity_buckets_match_exact_path(spark):
-    """Mixed ring arities + non-polygon rows in ONE batch: the grouped
-    dense pre-classifier must agree with relate_pair on every row."""
+    """Mixed ring arities + non-polygon rows in ONE batch, and a batch of
+    all-POLYGON rows of one arity (the single-bucket shape every
+    triangle tile-join stream has): the grouped dense pre-classifier
+    must agree with relate_pair on every row."""
     import random
 
-    from ds_jedai_spark.operators.relate_general import with_general_relations
     from ds_jedai_spark.operators.relate import RELATIONS
 
     rng = random.Random(2024)
@@ -173,35 +175,80 @@ def test_ragged_arity_buckets_match_exact_path(spark):
         ]
         return [pts + [pts[0]]]
 
-    rows = []
+    mixed = []
     for i in range(200):
         kind = rng.randrange(4)
         cx, cy = rng.randint(-40, 40) / 16, rng.randint(-40, 40) / 16
         dx = rng.randint(-8, 8) / 16
         if kind == 0:      # same-arity polygons (3..6 vertices)
             k = rng.choice([3, 4, 5, 6])
-            rows.append(("POLYGON", ring(k, cx, cy),
-                         "POLYGON", ring(rng.choice([3, 4, 5, 6]), cx + dx, cy)))
+            mixed.append(("POLYGON", ring(k, cx, cy),
+                          "POLYGON", ring(rng.choice([3, 4, 5, 6]), cx + dx, cy)))
         elif kind == 1:    # polygon with hole (multi-ring -> exact path)
             sh = ring(4, cx, cy, 4.0)[0]
             ho = ring(4, cx, cy, 1.0)[0]
-            rows.append(("POLYGON", [sh, ho], "POLYGON", ring(3, cx + dx, cy)))
+            mixed.append(("POLYGON", [sh, ho], "POLYGON", ring(3, cx + dx, cy)))
         elif kind == 2:    # point vs polygon
-            rows.append(("POINT", [[[cx, cy]]], "POLYGON", ring(5, cx + dx, cy)))
+            mixed.append(("POINT", [[[cx, cy]]], "POLYGON", ring(5, cx + dx, cy)))
         else:              # line vs line
-            rows.append(("LINESTRING", [[[cx, cy], [cx + 2, cy + 1]]],
-                         "LINESTRING", [[[cx + dx, cy - 1], [cx + dx, cy + 2]]]))
-    df = spark.createDataFrame(
-        rows,
+            mixed.append(("LINESTRING", [[[cx, cy], [cx + 2, cy + 1]]],
+                          "LINESTRING", [[[cx + dx, cy - 1], [cx + dx, cy + 2]]]))
+    # Triangles both sides: far, nested, overlapping and identical
+    # (dx = 0 at equal size -> UNDECIDED, exact path) pairs.
+    triangles = []
+    for i in range(200):
+        cx, cy = rng.randint(-40, 40) / 16, rng.randint(-40, 40) / 16
+        dx = rng.choice([0, 1, 2, 4, 6, -6, 12, 200]) * rng.choice([0.5, 1.0])
+        triangles.append(("POLYGON", ring(3, cx, cy, rng.choice([1.0, 3.0])),
+                          "POLYGON", ring(3, cx + dx / 2, cy, 3.0)))
+    schema = (
         "s_gtype string, s_coords array<array<array<double>>>, "
-        "t_gtype string, t_coords array<array<array<double>>>",
+        "t_gtype string, t_coords array<array<array<double>>>"
     )
-    for r in with_general_relations(df, spread=False).collect():
-        exact = relate_pair(
-            r["s_gtype"], r["s_coords"], r["t_gtype"], r["t_coords"]
-        )
-        got = {rel: r[f"r_{rel}"] for rel in RELATIONS}
-        assert got == exact, (r["s_gtype"], r["t_gtype"], got, exact)
+    for rows in (mixed, triangles):
+        df = spark.createDataFrame(rows, schema)
+        for r in with_general_relations(df, spread=False).collect():
+            exact = relate_pair(
+                r["s_gtype"], r["s_coords"], r["t_gtype"], r["t_coords"]
+            )
+            got = {rel: r[f"r_{rel}"] for rel in RELATIONS}
+            assert got == exact, (r["s_gtype"], r["t_gtype"], got, exact)
+
+
+_PAIR_SCHEMA = (
+    "s_gtype string, s_coords array<array<array<double>>>, "
+    "t_gtype string, t_coords array<array<array<double>>>"
+)
+_TRI = [[[0.0, 0.0], [4.0, 0.0], [0.0, 4.0], [0.0, 0.0]]]
+
+
+@pytest.mark.parametrize("col", ["s_gtype", "s_coords", "t_gtype", "t_coords"])
+def test_verifier_rejects_null_cells(spark, col):
+    """A null gtype/coords cell raises a ValueError naming the column
+    instead of failing deep inside the per-pair path."""
+    row = {"s_gtype": "POLYGON", "s_coords": _TRI,
+           "t_gtype": "POLYGON", "t_coords": _TRI}
+    row[col] = None
+    df = spark.createDataFrame(
+        [(row["s_gtype"], row["s_coords"], row["t_gtype"], row["t_coords"])],
+        _PAIR_SCHEMA,
+    )
+    with pytest.raises(Exception, match=f"ValueError.*'{col}' has null"):
+        with_general_relations(df, spread=False).collect()
+
+
+def test_verifier_rejects_non_xy_coordinates(spark):
+    """A coordinate leaf with a third value is refused: read as an
+    [x, y] stream it would shift every later point, making equal points
+    compare unequal."""
+    df = spark.createDataFrame(
+        [("POINT", [[[0.5, 0.2, 7.0]]], "POINT", [[[0.5, 0.2]]])],
+        _PAIR_SCHEMA,
+    )
+    with pytest.raises(
+        Exception, match="ValueError.*'s_coords' has a coordinate that is not"
+    ):
+        with_general_relations(df, spread=False).collect()
 
 
 def test_point_in_any_multipolygon_part_even_odd():
