@@ -11,17 +11,39 @@ configuration and assembles the equivalent DataFrame plan:
 
 Everything stays declarative until verification, which uses the
 general-path DE-9IM verifier (Arrow-batched) for arbitrary WKT geometry.
+
+Each part of the lineage runs once per operation. Without pins every
+driver action re-executes everything upstream of it, so ``run`` pins
+(eager ``localCheckpoint``) exactly the frames that more than one action
+reads:
+
+- each side whose plan runs a Python step (WKT/WKB/GeoJSON parse, fine
+  envelopes, pyproj reprojection), after all per-side transforms; the
+  join and any later action read the parsed rows. Engine row-format
+  parquet has no such step and stays a lazy scan;
+- with ``export_path``, the verified output, which feeds both the sink
+  and the returned frame (pairs for the CSV sink, r_* flags for RDF
+  plus the counts aggregate).
+
+The driver statistics come from one aggregate per side
+(``model.tiles.stats_pass``): theta and the source extent for
+``total_blocks``, the target extent for the theta floor, and the mean
+vertex count for the AUTO load balancer on the full-verification route.
+On a pinned side the aggregate rides in the pinning job as observed
+metrics; on row-format parquet it is one query over the pruned
+minx..maxy columns (plus coords when the vertex count is needed).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ds_jedai_spark.config import JedaiConfig
 from ds_jedai_spark.io import readers, writers
-from ds_jedai_spark.model.tiles import compute_theta
+from ds_jedai_spark.model.tiles import compute_theta, side_stats, stats_pass
 from ds_jedai_spark.operators import progressive as prog
 from ds_jedai_spark.operators.relate import RELATIONS as REL_ORDER
 from ds_jedai_spark.operators.relate_general import with_general_relations
@@ -208,22 +230,31 @@ def _check_crs(source: DataFrame, target: DataFrame, strict: bool) -> None:
         warnings.warn(msg, UserWarning, stacklevel=2)
 
 
-def _total_blocks(df: DataFrame, theta: tuple[float, float]) -> int:
+def _total_blocks(source, theta: tuple[float, float]) -> int:
     """Grid-cell count of the global extent under theta (reference
     GridPartitioner.computeTotalBlocks, utils/readers/
-    GridPartitioner.scala:85-93)."""
+    GridPartitioner.scala:85-93). ``source`` is a DataFrame or its
+    ``side_stats``."""
     tx, ty = theta
-    r = df.agg(
-        F.min("minx").alias("a"), F.max("maxx").alias("b"),
-        F.min("miny").alias("c"), F.max("maxy").alias("d"),
-    ).first()
-    if r.a is None:  # empty input: no extent, one (vacuous) block
+    st = side_stats(source)
+    if st.minx is None:  # empty input: no extent, one (vacuous) block
         return 1
     import math
 
-    nx = math.floor(r.b / tx) - math.floor(r.a / tx) + 1
-    ny = math.floor(r.d / ty) - math.floor(r.c / ty) + 1
+    nx = math.floor(st.maxx / tx) - math.floor(st.minx / tx) + 1
+    ny = math.floor(st.maxy / ty) - math.floor(st.miny / ty) + 1
     return max(1, nx * ny)
+
+
+# A Python step in a side's plan (the WKT/WKB/GeoJSON parse, fine
+# envelopes, a pyproj reprojection): MapInArrow/MapInPandas and the
+# Arrow/Batch EvalPython nodes of the optimized plan.
+_PYTHON_STEP = re.compile(r"EvalPython|InPandas|InArrow")
+
+
+def _runs_python(df: DataFrame) -> bool:
+    return bool(_PYTHON_STEP.search(
+        df._jdf.queryExecution().optimizedPlan().toString()))
 
 
 # Above this budget, TakeOrderedAndProject's driver-side merge of `budget`
@@ -306,7 +337,16 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
     into the source's frame in-plan instead of warning; with a bbox the
     target's filter applies AFTER reprojection (same frame as the box —
     the format-level index skip is traded for correctness on that
-    side)."""
+    side).
+
+    Driver actions before the return, per side: one pin if its read
+    runs Python (the pinning job also yields the side's stats), else one
+    stats aggregate; then the chosen route's own (the sampled
+    partitioner's quantiles, the skew split when it engages), and with
+    ``export_path`` one pin of the verified output plus the sink write.
+    The returned frame reads the pins, so consuming it replays neither
+    the parse nor, after a sink, the verifier (see the module
+    docstring)."""
     bbox = cfg.extra.get("bbox")
     auto = bool(cfg.extra.get("autoReproject"))
     source = read_dataset(spark, cfg.source, bbox=bbox)
@@ -326,15 +366,21 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
 
         source = with_fine_envelopes(source)
         target = with_fine_envelopes(target)
-
-    # Target-side degenerate-theta guard (model/tiles.floor_theta): a
-    # source whose domain collapses to a point cannot produce a sane
-    # granularity for targets spanning a real domain.
     from ds_jedai_spark.model.tiles import floor_theta
 
-    theta = floor_theta(
-        compute_theta(source, cfg.theta_granularity), target
-    )
+    # One pass per side (see the module docstring); a side whose plan
+    # runs Python is pinned by it. The target's extent floors theta: a
+    # source whose domain collapses to a point cannot produce a sane
+    # granularity for targets spanning a real domain (model/tiles.
+    # floor_theta). The mean vertex count is read only where the AUTO
+    # load balancer needs it.
+    lb_mode = str(cfg.extra.get("loadBalancer", "AUTO")).upper()
+    estimate = not cfg.progressive_algorithm and lb_mode == "AUTO"
+    source, sstats = stats_pass(source, cfg.theta_granularity,
+                                vertices=estimate, pin=_runs_python(source))
+    target, tstats = stats_pass(target, vertices=estimate,
+                                pin=_runs_python(target))
+    theta = floor_theta(compute_theta(sstats, cfg.theta_granularity), tstats)
     fine = ("fine_envs",) if decomposed else ()
     extras = ("gtype", "coords") + fine + (("ts",) if cfg.source.date_field else ())
     textras = ("gtype", "coords") + fine + (("ts",) if cfg.target.date_field else ())
@@ -368,7 +414,7 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
     )
     if cfg.progressive_algorithm and not stateful:
         wexpr = weight_exprs(
-            "s_", "t_", theta[0], theta[1], _total_blocks(source, theta)
+            "s_", "t_", theta[0], theta[1], _total_blocks(sstats, theta)
         )
         pair_keys = _schedule(cand, cfg, wexpr, source, theta)
         cand = cand.join(pair_keys, on=["s_id", "t_id"], how="left_semi")
@@ -386,7 +432,7 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
         )
 
         wexpr = weight_exprs(
-            "s_", "t_", theta[0], theta[1], _total_blocks(source, theta)
+            "s_", "t_", theta[0], theta[1], _total_blocks(sstats, theta)
         )
         main = wexpr[cfg.main_wf.lower().replace("pearson_x2", "x2")]
         qrel = (
@@ -409,14 +455,19 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
         # configurations: {loadBalancer: AUTO|ON|OFF}.
         from ds_jedai_spark.operators.loadbalance import auto_balance
 
-        cand, _ = auto_balance(
-            cand, source, target,
-            mode=str(cfg.extra.get("loadBalancer", "AUTO")),
-        )
+        cand, _ = auto_balance(cand, sstats, tstats, mode=lb_mode)
 
     verified = with_general_relations(cand)
 
+    # With a sink, the verified output feeds both the write and the
+    # returned frame: pin it once so neither replays the lineage.
     if cfg.relation == "DE9IM":
+        flags = verified.select(
+            "s_id", "t_id", *[f"r_{r}" for r in REL_ORDER if r != "disjoint"]
+        )
+        if cfg.export_path:
+            flags = flags.localCheckpoint()
+            writers.export_rdf(flags, cfg.export_path)
         aggs = [
             F.count(F.lit(1)).alias("verifications"),
             F.count(F.when(F.col("r_intersects"), True)).alias("qualifying_pairs"),
@@ -424,16 +475,11 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
         for r in REL_ORDER:
             if r != "disjoint":
                 aggs.append(F.count(F.when(F.col(f"r_{r}"), True)).alias(f"n_{r}"))
-        result = verified.agg(*aggs)
-        if cfg.export_path:
-            flags = verified.select(
-                "s_id", "t_id", *[f"r_{r}" for r in REL_ORDER if r != "disjoint"]
-            )
-            writers.export_rdf(flags, cfg.export_path)
-        return result
+        return flags.agg(*aggs)
 
     rel = cfg.relation.lower()
     pairs = verified.where(F.col(f"r_{rel}")).select("s_id", "t_id")
     if cfg.export_path:
+        pairs = pairs.localCheckpoint()
         writers.export_csv_pairs(pairs, cfg.export_path)
     return pairs

@@ -42,24 +42,26 @@ def export_matching_pairs_tsv(pairs: DataFrame, path: str) -> None:
 
 def export_rdf(relations: DataFrame, path: str) -> None:
     """One GeoSPARQL triple per true relation flag per pair (reference
-    exportRDF): expects r_<relation> boolean columns."""
-    triples = None
-    for rel, pred in RELATION_PREDICATES.items():
-        col = f"r_{rel}"
-        if col not in relations.columns:
-            continue
-        t = relations.where(F.col(col)).select(
-            F.concat(
-                F.lit("<"),
-                F.col("s_id").cast("string"),
-                F.lit(f"> <{GEOSPARQL}{pred}> <"),
-                F.col("t_id").cast("string"),
-                F.lit("> ."),
-            ).alias("value")
-        )
-        triples = t if triples is None else triples.union(t)
-    if triples is not None:
-        triples.write.mode("overwrite").text(path)
+    exportRDF): expects r_<relation> boolean columns. One pass over
+    ``relations``: each row explodes its array of ``when(r_x, triple)``
+    values and the nulls (false or null flags) are dropped, so the
+    input's plan runs once, not once per relation."""
+    triples = [
+        F.when(F.col(f"r_{rel}"), F.concat(
+            F.lit("<"),
+            F.col("s_id").cast("string"),
+            F.lit(f"> <{GEOSPARQL}{pred}> <"),
+            F.col("t_id").cast("string"),
+            F.lit("> ."),
+        ))
+        for rel, pred in RELATION_PREDICATES.items()
+        if f"r_{rel}" in relations.columns
+    ]
+    if triples:
+        value = F.explode(F.array(*triples)).alias("value")
+        relations.select(value).where(F.col("value").isNotNull()).write.mode(
+            "overwrite"
+        ).text(path)
 
 
 def export_ntriples(

@@ -106,38 +106,21 @@ def segment_group_units(seg_cand: DataFrame) -> DataFrame:
 VERTEX_COST_THRESHOLD = 64.0
 
 
-def estimate_pair_cost(source: DataFrame, target: DataFrame,
-                       sample: int = 50_000) -> float:
+def estimate_pair_cost(source, target) -> float:
     """Average per-pair verification cost proxy: the product of the two
-    inputs' mean vertex counts, each from a bounded LIMIT sample (reads a
-    handful of files at 100 TB — never a full scan, and never an action
-    over the exploded candidate set).
+    inputs' exact mean vertex counts. Each side is a DataFrame or its
+    ``model.tiles.side_stats(..., vertices=True)``; ``api.run`` passes
+    the stats it already collected, so the means ride in the one stats
+    pass per side and never cost a job over the candidate set. An
+    envelope-only input counts as boxes (5 vertices), an empty one as 0.
+    The means are exact, so the AUTO decision is a function of the
+    inputs alone."""
+    from ds_jedai_spark.model.tiles import side_stats
 
-    Determinism: the averaged rows are the ``sample/10`` SMALLEST
-    xxhash64(id) rows within the LIMIT-bounded superset (the same
-    rank-based convention as the ANN seeding). The superset itself is
-    stable whenever the scan's partition order is (true for all the
-    engine's readers on a fixed file listing), and when it does shift
-    the smallest-hash subset overlaps heavily — so the AUTO dispatch
-    does not flip plan shape run-to-run on corpora near the threshold,
-    without paying a full scan for an exact deterministic sample."""
+    def mean_vertices(side) -> float:
+        return side_stats(side, extent=False, vertices=True).vertices or 0.0
 
-    def mean_verts(df: DataFrame) -> float:
-        if "coords" not in df.columns:
-            return 5.0  # envelope-only input: every geometry is a box
-        sub = df.select(
-            F.xxhash64(F.col("id").cast("string")).alias("h"),
-            F.expr("aggregate(coords, 0, (a, p) -> a + size(p))").alias("v"),
-        ).limit(sample)
-        row = (
-            sub.orderBy("h")
-            .limit(max(1, sample // 10))
-            .agg(F.avg("v").alias("m"))
-            .first()
-        )
-        return float(row["m"] or 0.0)
-
-    return mean_verts(source) * mean_verts(target)
+    return mean_vertices(source) * mean_vertices(target)
 
 
 def auto_balance(
@@ -154,8 +137,11 @@ def auto_balance(
 
     ``mode``: ``AUTO`` (estimate, engage above ``threshold``), ``ON``
     (always split), ``OFF`` (never). Returns (candidates, engaged).
-    The estimate never touches ``cand`` — the cheap route keeps the
-    single-pass streaming plan (no materialization is introduced).
+    The estimate (``estimate_pair_cost``) reads only ``source`` and
+    ``target`` — DataFrames, or the side stats ``api.run`` collected
+    with the mean vertex count, which then cost no job here — and never
+    touches ``cand``: the cheap route keeps the single-pass streaming
+    plan (no materialization is introduced).
     Reference: WellBalancedDistributedInterlinking.scala:33-92 applies
     the split unconditionally; the dispatch is this engine's addition.
     """

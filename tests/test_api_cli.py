@@ -122,6 +122,79 @@ def test_single_relation_pairs(spark, conf_path, tmp_path):
     assert exported.count() == len(pairs)
 
 
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted under a fresh
+    job group."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _final_plan(df) -> str:
+    """The physical plan ``df`` last executed (AQE's final plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    return plan.toString()
+
+
+# Jobs api.run starts before its result is consumed, on the two WKT
+# files of conf_path. DE9IM: 2 CSV header reads and 2 side pins, whose
+# jobs also yield the side stats = 4 measured, 1 of headroom (separate
+# theta / floor / sampled-estimate passes take 10). A progressive pair
+# query with a CSV sink adds 6 scheduling/join jobs (AQE runs each
+# shuffle map stage as its own job), the pin of the verified pairs and
+# the write = 12 measured, 1 of headroom (sinking an unpinned frame
+# after separate stats passes takes 15).
+DE9IM_RUN_JOBS = 5
+SINK_RUN_JOBS = 13
+# take(21) + count of a pinned pair frame: 4 measured, 2 of headroom.
+# Replaying read -> join -> schedule -> verify takes 16.
+PAIRS_CONSUME_JOBS = 6
+
+
+def test_run_parses_and_verifies_once(spark, conf_path):
+    """The returned counts frame reads both sides from their pins (no
+    parse node left) and holds the one verifier; api.run's own driver
+    actions stay within DE9IM_RUN_JOBS."""
+    cfg = load_config(conf_path)
+    result, jobs = _jobs_started(spark, lambda: api.run(spark, cfg))
+    assert jobs <= DE9IM_RUN_JOBS, jobs
+    assert result.collect()[0]["verifications"] > 0
+    plan = _final_plan(result)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "r_intersects" in plan and "wkt" not in plan, plan
+
+
+def test_run_with_sink_returns_the_pinned_pairs(spark, conf_path, tmp_path):
+    """With export_path set, the sink and the returned frame share one
+    pinned verified output: the returned plan has no verifier, api.run
+    stays within SINK_RUN_JOBS and the CLI's take(21) + count within
+    PAIRS_CONSUME_JOBS."""
+    cfg = load_config(conf_path)
+    cfg.relation = "INTERSECTS"
+    cfg.progressive_algorithm = "PROGRESSIVE_GIANT"
+    cfg.budget = 8
+    cfg.export_path = str(tmp_path / "pairs")
+    pairs, jobs = _jobs_started(spark, lambda: api.run(spark, cfg))
+    assert jobs <= SINK_RUN_JOBS, jobs
+    assert "MapInArrow" not in pairs._jdf.queryExecution().optimizedPlan(
+    ).toString()
+    (head, total), jobs = _jobs_started(
+        spark, lambda: (pairs.take(21), pairs.count()))
+    assert jobs <= PAIRS_CONSUME_JOBS, jobs
+    exported = spark.read.option("header", True).csv(cfg.export_path)
+    assert 0 < total == exported.count() <= cfg.budget
+    assert {(r.s_id, r.t_id) for r in head} == {
+        (r.s_id, r.t_id) for r in exported.collect()}
+
+
 def test_decomposed_entity_type_same_qualifying(spark, conf_path):
     # Fine-grained pre-filter may prune non-intersecting candidates but
     # never a qualifying pair: counts of true relations are unchanged.

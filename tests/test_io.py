@@ -175,6 +175,43 @@ def test_sinks_write_expected_shapes(spark):
         assert rdf.count() == n_true
 
 
+def _python_nodes_of_last_execution(spark) -> list[str]:
+    """Python-evaluating node names in the plan of the most recent SQL
+    execution, read from Spark's SQL status store (filled with the UI
+    off)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last = max(execs.apply(i).executionId() for i in range(execs.size()))
+    nodes = store.planGraph(last).allNodes()
+    names = [nodes.apply(i).name() for i in range(nodes.size())]
+    return [n for n in names if "InArrow" in n or "EvalPython" in n]
+
+
+def test_export_rdf_runs_its_input_once(spark, tmp_path):
+    """The written plan holds the input's Python node once, however many
+    r_* flag columns it carries; the triples are one per true flag."""
+    rows = [("a", "b", True, True, False), ("c", "d", False, True, None),
+            ("e", "f", False, False, False)]
+    schema = ("s_id string, t_id string, r_contains boolean, "
+              "r_intersects boolean, r_touches boolean")
+
+    def identity(batches):
+        yield from batches
+
+    flags = spark.createDataFrame(rows, schema).mapInArrow(identity, schema)
+    out = str(tmp_path / "rdf")
+    export_rdf(flags, out)
+    assert _python_nodes_of_last_execution(spark) == ["MapInArrow"]
+    got = sorted(r.value for r in spark.read.text(out).collect())
+    g = "http://www.opengis.net/ont/geosparql#"
+    assert got == sorted([
+        f"<a> <{g}sfContains> <b> .", f"<a> <{g}sfIntersects> <b> .",
+        f"<c> <{g}sfIntersects> <d> .",
+    ])
+
+
 def test_read_geojson_collection_matches_ndjson(spark, tmp_path):
     """A whole-file FeatureCollection parses to the same rows as the same
     features in NDJSON form."""
